@@ -444,11 +444,12 @@ def run_scaling_deep(
         "spark = get_session(parallelism=%(cpus)d, extra_conf={'spark.local.dir': local})\n"
         "t = TokenTable(%(copy)r)\n"
         + _DEEP_LEG[op]
-        + "print(json.dumps({'sec': dt, 'credited': credited}))\n"
+        + "print(json.dumps({'sec': dt, 'credited': credited, 'phases': r.get('phases')}))\n"
         "spark.stop()\n"
     )
     detail: dict[int, list[float]] = {}
     secs: dict[int, list[float]] = {}
+    phases: dict[int, list[dict | None]] = {}  # per-leg op phase profile
 
     def _equalize_io_state() -> None:
         """Start every leg from the same IO state: flush dirty pages so
@@ -506,11 +507,6 @@ def run_scaling_deep(
             _sh.rmtree(copy, ignore_errors=True)
             _sh.rmtree(local, ignore_errors=True)
         lines = [l for l in out.stdout.strip().splitlines() if l.startswith("{")]
-        # surface the env-gated phase timers (FEPOC_MERGE_TIMING=1) so a
-        # deep run doubles as the per-leg Amdahl phase profile
-        for l in out.stdout.splitlines():
-            if l.startswith("MERGE_PHASE"):
-                print(f"[leg cpus={cpus}] {l}", file=sys.stderr)
         if not lines:
             print(f"deep leg cpus={cpus} failed:\n" + out.stderr[-2000:],
                   file=sys.stderr)
@@ -534,6 +530,7 @@ def run_scaling_deep(
                         "salvageable reps (see stderr above)")
                 secs.setdefault(cpus, []).append(round(rec["sec"], 1))
                 detail.setdefault(cpus, []).append(round(rec["credited"] / rec["sec"], 1))
+                phases.setdefault(cpus, []).append(rec.get("phases"))
             if truncated:
                 break
     finally:
@@ -551,6 +548,7 @@ def run_scaling_deep(
         "truncated": truncated,
         "detail": detail,
         "leg_secs": secs,
+        "leg_phases": phases,
         "efficiency_best": round(max(big) / max(small) / 4, 3),
         "efficiency_median": round(med(big) / med(small) / 4, 3),
         "throughput_n": max(small),

@@ -19,14 +19,14 @@ Scale shape:
   min/max for curve-range pruning; table scans use the fixed 4-column
   schema and never see it.
 - Per-partition resumable units with lineage checkpoints, atomic
-  snapshot commit — same protocol as compaction.
+  snapshot commit — the shared maintenance-job protocol (job.py).
 """
 
 from __future__ import annotations
 
 from collections import defaultdict
-from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
+from functools import partial
 
 import numpy as np
 import pandas as pd
@@ -39,7 +39,7 @@ from ..plans.sfc import (
     normalize_to_grid,
     string_prefix_ordinal,
 )
-from .lineage import LineageLog
+from .job import MaintenanceJob
 from .metadata import TOKEN_SCHEMA, TokenTable, list_parquet_files
 from .stats import file_stats_rows
 
@@ -165,33 +165,21 @@ def cluster(
     if curve not in ("zorder", "hilbert"):
         raise ValueError(f"unknown curve: {curve}")
     parent = table.current_snapshot_id()
+    job = MaintenanceJob(spark, table, job_id or f"{curve}-snap{parent}", parent,
+                         _fail_after_units)
+    prior = job.replay()
+    if prior is not None:
+        return prior
     # Driver-side manifest planning (pyarrow footer path when small —
     # zero Spark jobs; see metadata.manifest_records).
-    entries = [
-        r for r in table.manifest_records(spark, parent)
-        if partitions is None or r["partition"] in partitions
-    ]
     by_part: dict[str, list] = defaultdict(list)
-    for r in entries:
-        by_part[r["partition"]].append(r)
-    if not entries:
+    with job.phase("plan"):
+        for r in table.manifest_records(spark, parent):
+            if partitions is None or r["partition"] in partitions:
+                by_part[r["partition"]].append(r)
+    if not by_part:
         return {"snapshot_id": None, "units": 0}
-
-    job_tag = job_id or f"{curve}-snap{parent}"
-    log = LineageLog(table.root, job_tag)
-    prior = log.committed()
-    if prior is not None:  # replayed job: already committed, no-op
-        return {k: v for k, v in prior.items()
-                if k not in ("event", "job_id", "timestamp_ms")}
-    published = table.snapshot_for_job(job_tag)
-    if published is not None:
-        # crash between VERSION swap and the 'committed' lineage append:
-        # snapshot is live — repair the log instead of re-committing the
-        # same manifest rows (see metadata.snapshot_for_job)
-        summary = dict(published["summary"])
-        log.log_event("committed", snapshot_id=published["snapshot_id"], **summary)
-        return {"snapshot_id": published["snapshot_id"], **summary}
-    done = log.completed_units()
+    out_root = table.new_data_dir(job.job_tag)
 
     def run_unit(part: str) -> None:
         rows_p = by_part[part]
@@ -203,7 +191,7 @@ def cluster(
         key_udf = _make_key_udf(specs, curve, bits)
         df = spark.read.schema(TOKEN_SCHEMA).parquet(*files)
         keyed = df.withColumn("zkey", key_udf(*[F.col(s.name) for s in specs]))
-        out_dir = table.new_data_dir(job_tag) / part
+        out_dir = out_root / part
 
         # Range placement WITHOUT repartitionByRange: its boundary
         # sampling job re-executes the child plan — a second full pass
@@ -252,7 +240,7 @@ def cluster(
         )
         new_files = list_parquet_files(out_dir)
         stats = file_stats_rows(spark, [(f, part) for f in new_files])
-        log.mark_unit_done(
+        job.log.mark_unit_done(
             part,
             files_in=files,
             new_manifest_rows=stats,
@@ -260,36 +248,17 @@ def cluster(
                      "bytes": total_bytes, "rows": total_rows},
         )
 
-    # concurrent resumable units (see compaction.py for rationale);
-    # sequential under the crash-injection hook.
-    pending = [p for p in sorted(by_part) if p not in done]
-    if _fail_after_units is not None:
-        for i, part in enumerate(pending, 1):
-            run_unit(part)
-            if i >= _fail_after_units:
-                raise RuntimeError(f"injected failure after {i} units (test hook)")
-    elif pending:
-        with ThreadPoolExecutor(max_workers=min(8, len(pending))) as ex:
-            for f in [ex.submit(run_unit, p) for p in pending]:
-                f.result()
-
-    done = log.completed_units()
-    removed = [f for rec in done.values() for f in rec["files_in"]]
-    new_rows = [row for rec in done.values() for row in rec["new_manifest_rows"]]
-    summary = {
+    job.run_units(
+        [(p, partial(run_unit, p)) for p in sorted(by_part) if p not in job.done], "rewrite"
+    )
+    return job.commit(f"cluster-{curve}", lambda done, removed, new_rows: {
         "curve": curve,
         "columns": list(columns),
         "files_rewritten": len(removed),
         "files_written": len(new_rows),
-        "rows": sum(rec["metrics"]["rows"] for rec in done.values()),
+        "rows": sum(rec["metrics"]["rows"] for rec in done),
         "units": len(by_part),
-        "job_tag": job_tag,
-    }
-    sid = table.commit_delta(
-        spark, removed, new_rows, operation=f"cluster-{curve}", summary=summary, parent_id=parent
-    )
-    log.log_event("committed", snapshot_id=sid, **summary)
-    return {"snapshot_id": sid, **summary}
+    })
 
 
 def prune_files(

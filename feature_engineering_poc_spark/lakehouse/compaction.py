@@ -21,6 +21,9 @@ Shape of the job, scale-first:
    still resolve the old files (they are not deleted until
    snapshot expiry — expire.py).
 
+Replay, unit execution, job groups, phase timings and the commit are
+the shared maintenance-job protocol (job.py).
+
 Reference precedent: Delta ``optimizeWrite``/``autoCompact`` knobs the
 reference enables but delegates (SparkSessionManager.scala:73-74); here
 the mechanism is explicit and from scratch.
@@ -29,12 +32,12 @@ the mechanism is explicit and from scratch.
 from __future__ import annotations
 
 from collections import defaultdict
-from concurrent.futures import ThreadPoolExecutor
+from functools import partial
 
 from pyspark.sql import SparkSession
 
 from ..plans.binpack import pack_bins
-from .lineage import LineageLog
+from .job import MaintenanceJob
 from .metadata import MANIFEST_SCHEMA, TOKEN_SCHEMA, TokenTable, list_parquet_files
 from .stats import file_stats_rows
 
@@ -134,7 +137,7 @@ def compact(
     so grouping loses no parallelism). This bounds the per-job driver
     submission overhead — the constant serial term — at 1/64th of a
     job per partition, while lineage checkpoints stay per-partition
-    (a crash mid-chunk redoes at most one chunk of deterministic,
+    (a crash redoes only the in-flight chunks of deterministic,
     mode=overwrite outputs). A table with 10^5 small partitions
     compacts in ~1.5k jobs instead of 10^5.
 
@@ -147,148 +150,99 @@ def compact(
     """
     parent = table.current_snapshot_id()
     threshold = small_file_threshold or int(target_file_bytes * 0.75)
-    job_tag = job_id or f"compact-snap{parent}"
-    log = LineageLog(table.root, job_tag)
-    prior = log.committed()
-    if prior is not None:  # replayed job: already committed, no-op
-        return {k: v for k, v in prior.items()
-                if k not in ("event", "job_id", "timestamp_ms")}
-    published = table.snapshot_for_job(job_tag)
-    if published is not None:
-        # crash between VERSION swap and the 'committed' lineage append:
-        # snapshot is live — repair the log instead of re-committing the
-        # same manifest rows (see metadata.snapshot_for_job)
-        summary = dict(published["summary"])
-        log.log_event("committed", snapshot_id=published["snapshot_id"], **summary)
-        return {"snapshot_id": published["snapshot_id"], **summary}
+    job = MaintenanceJob(spark, table, job_id or f"compact-snap{parent}", parent,
+                         _fail_after_units)
+    prior = job.replay()
+    if prior is not None:
+        return prior
 
     # PLAN — metadata only, DRIVER-SIDE for small manifests (pyarrow
     # footer reads, zero Spark jobs; distributed collect above
     # SMALL_MANIFEST_ROWS) — same driver planning Iceberg's
     # rewriteDataFiles does.
-    by_part: dict[str, list] = defaultdict(list)
-    for r in table.manifest_records(spark, parent):
-        if r["file_bytes"] < threshold and (
-            partitions is None or r["partition"] in partitions
-        ):
-            by_part[r["partition"]].append(
-                (r["file_path"], r["file_bytes"], r["record_count"])
-            )
-
-    units = []  # (partition, bins)
-    for part in sorted(by_part):
-        bins = pack_bins(by_part[part], part, target_file_bytes)
-        if len(by_part[part]) > len(bins):  # merging actually reduces file count
-            units.append((part, bins))
+    with job.phase("plan"):
+        by_part: dict[str, list] = defaultdict(list)
+        for r in table.manifest_records(spark, parent):
+            if r["file_bytes"] < threshold and (
+                partitions is None or r["partition"] in partitions
+            ):
+                by_part[r["partition"]].append(
+                    (r["file_path"], r["file_bytes"], r["record_count"])
+                )
+        units = []  # (partition, bins)
+        for part in sorted(by_part):
+            bins = pack_bins(by_part[part], part, target_file_bytes)
+            if len(by_part[part]) > len(bins):  # merging actually reduces file count
+                units.append((part, bins))
     if not units:
         return {"snapshot_id": None, "units": 0, "files_in": 0, "files_out": 0, "rows": 0}
+    pending = [(part, bins) for part, bins in units if part not in job.done]
+    out_root = table.new_data_dir(job.job_tag)
 
-    done = log.completed_units()
-    resumed = sum(1 for part, _ in units if part in done)
-    pending = [(part, bins) for part, bins in units if part not in done]
+    def mark_done(part: str, bins, new_rows: list[dict]) -> None:
+        files = [f for b in bins for f in b.files]
+        job.log.mark_unit_done(
+            part,
+            files_in=files,
+            new_manifest_rows=new_rows,
+            metrics={
+                "files_rewritten": len(files),
+                "files_written": len(new_rows),
+                "bytes_compacted": sum(b.bytes for b in bins),
+                "rows": sum(b.rows for b in bins),
+            },
+        )
 
-    def run_unit(part: str, bins) -> None:
+    def binpack_chunk(chunk) -> None:
+        specs = [
+            {"files": b.files, "partition": part,
+             "out": str(out_root / part / f"bin-{i:05d}.parquet")}
+            for part, bins in chunk
+            for i, b in enumerate(bins)
+        ]
+        stats_by_part: dict[str, list[dict]] = defaultdict(list)
+        for s in _rewrite_bins_distributed(spark, specs):
+            stats_by_part[s["partition"]].append(s)
+        for part, bins in chunk:
+            mark_done(part, bins, stats_by_part[part])
+
+    def sort_unit(part: str, bins) -> None:
+        # global per-partition re-sort (one range shuffle)
         files = [f for b in bins for f in b.files]
         rows = sum(b.rows for b in bins)
         n_out = len(bins)
-        out_dir = table.new_data_dir(job_tag) / part
-        if mode == "binpack":
-            specs = [
-                {"files": b.files, "partition": part, "out": str(out_dir / f"bin-{i:05d}.parquet")}
-                for i, b in enumerate(bins)
-            ]
-            stats = _rewrite_bins_distributed(spark, specs)
-            new_count = len(stats)
-        else:  # mode == "sort": global per-partition re-sort (one range shuffle)
-            df = spark.read.schema(TOKEN_SCHEMA).parquet(*files)
-            (
-                df.repartitionByRange(n_out, "doc_id")
-                .sortWithinPartitions("doc_id")
-                .write.mode("overwrite")
-                .option("maxRecordsPerFile", max(1, (rows + n_out - 1) // n_out + 1))
-                .parquet(str(out_dir))
-            )
-            new_files = list_parquet_files(out_dir)
-            stats = file_stats_rows(spark, [(f, part) for f in new_files])
-            new_count = len(new_files)
-        log.mark_unit_done(
-            part,
-            files_in=files,
-            new_manifest_rows=stats,
-            metrics={
-                "files_rewritten": len(files),
-                "files_written": new_count,
-                "bytes_compacted": sum(b.bytes for b in bins),
-                "rows": rows,
-            },
+        out_dir = out_root / part
+        (
+            spark.read.schema(TOKEN_SCHEMA).parquet(*files)
+            .repartitionByRange(n_out, "doc_id")
+            .sortWithinPartitions("doc_id")
+            .write.mode("overwrite")
+            .option("maxRecordsPerFile", max(1, (rows + n_out - 1) // n_out + 1))
+            .parquet(str(out_dir))
         )
+        new_files = list_parquet_files(out_dir)
+        mark_done(part, bins, file_stats_rows(spark, [(f, part) for f in new_files]))
 
     # EXECUTE. Binpack: pending units GROUPED into chunks of
     # ``units_per_job`` — all of a chunk's bins ride one Spark job
     # (bins are independent tasks; grouping adds parallelism within the
     # job and slashes per-job driver overhead). Lineage checkpoints stay
-    # per-partition. Sort mode / the crash hook run one unit per job
-    # (sort needs its own range shuffle per partition; the hook needs an
-    # exact crash point).
-    if _fail_after_units is not None:
-        for i, (part, bins) in enumerate(pending, 1):
-            run_unit(part, bins)
-            if i >= _fail_after_units:
-                raise RuntimeError(f"injected failure after {i} units (test hook)")
-    elif mode == "binpack" and pending:
-        for chunk_start in range(0, len(pending), units_per_job):
-            chunk = pending[chunk_start : chunk_start + units_per_job]
-            all_specs = []
-            for part, bins in chunk:
-                out_dir = table.new_data_dir(job_tag) / part
-                all_specs.extend(
-                    {
-                        "files": b.files,
-                        "partition": part,
-                        "out": str(out_dir / f"bin-{i:05d}.parquet"),
-                    }
-                    for i, b in enumerate(bins)
-                )
-            stats_all = _rewrite_bins_distributed(spark, all_specs)
-            stats_by_part: dict[str, list[dict]] = defaultdict(list)
-            for s in stats_all:
-                stats_by_part[s["partition"]].append(s)
-            for part, bins in chunk:
-                files = [f for b in bins for f in b.files]
-                log.mark_unit_done(
-                    part,
-                    files_in=files,
-                    new_manifest_rows=stats_by_part[part],
-                    metrics={
-                        "files_rewritten": len(files),
-                        "files_written": len(stats_by_part[part]),
-                        "bytes_compacted": sum(b.bytes for b in bins),
-                        "rows": sum(b.rows for b in bins),
-                    },
-                )
-    elif pending:
-        with ThreadPoolExecutor(max_workers=min(8, len(pending))) as ex:
-            futures = [ex.submit(run_unit, part, bins) for part, bins in pending]
-            for f in futures:
-                f.result()
+    # per-partition; chunks run on the job's unit pool. The crash hook
+    # needs an exact crash point, so its chunks hold one unit. Sort mode
+    # runs one unit per job (each partition needs its own range shuffle).
+    if mode == "binpack":
+        size = 1 if _fail_after_units is not None else units_per_job
+        chunks = [pending[i : i + size] for i in range(0, len(pending), size)]
+        work = [(chunk[0][0], partial(binpack_chunk, chunk)) for chunk in chunks]
+    else:
+        work = [(part, partial(sort_unit, part, bins)) for part, bins in pending]
+    job.run_units(work, "rewrite")
 
-    # COMMIT — manifest delta assembled from lineage (covers resumed
-    # units too); driver-side pyarrow write for small manifests,
-    # distributed above SMALL_MANIFEST_ROWS (metadata.commit_delta).
-    done = log.completed_units()
-    removed_files = [f for rec in done.values() for f in rec["files_in"]]
-    new_rows = [row for rec in done.values() for row in rec["new_manifest_rows"]]
-    summary = {
-        "files_compacted": len(removed_files),
+    # COMMIT — manifest delta assembled from lineage (covers resumed units)
+    return job.commit("compact", lambda done, removed, new_rows: {
+        "files_compacted": len(removed),
         "files_written": len(new_rows),
-        "rows_rewritten": sum(rec["metrics"]["rows"] for rec in done.values()),
-        "bytes_compacted": sum(rec["metrics"]["bytes_compacted"] for rec in done.values()),
+        "rows_rewritten": sum(rec["metrics"]["rows"] for rec in done),
+        "bytes_compacted": sum(rec["metrics"]["bytes_compacted"] for rec in done),
         "units": len(units),
-        "units_resumed": resumed,
-        "job_tag": job_tag,
-    }
-    sid = table.commit_delta(
-        spark, removed_files, new_rows, operation="compact", summary=summary, parent_id=parent
-    )
-    log.log_event("committed", snapshot_id=sid, **summary)
-    return {"snapshot_id": sid, **summary}
+    })

@@ -12,6 +12,9 @@ its data files are fully written — so a crash mid-unit leaves no
 marker, and the rerun rewrites that unit's (deterministically named,
 mode=overwrite) output directory. Completion is therefore idempotent:
 no partition is ever double-applied (north_rule requirement).
+
+The job protocol that writes and reads these records — replay, unit
+execution, commit assembly and the 'committed' event — is job.py.
 """
 
 from __future__ import annotations

@@ -47,6 +47,9 @@ Scale shape:
 5. COMMIT: manifest − touched files + rewritten + inserted; atomic
    snapshot swap. Old snapshots untouched (snapshot isolation).
 
+Replay, unit execution, job groups, phase timings and the commit are
+the shared maintenance-job protocol (job.py).
+
 Serial driver cost (the Amdahl S term that caps scaling efficiency) is
 exactly THREE blocking aggregations before the rewrite fan-out:
 
@@ -68,25 +71,21 @@ from __future__ import annotations
 
 import logging
 import os
-import time
 from collections import defaultdict
-from concurrent.futures import ThreadPoolExecutor
+from functools import partial
 from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .lineage import LineageLog
+from .job import MaintenanceJob
 from .metadata import TOKEN_SCHEMA, TokenTable, list_parquet_files
 from .skew import salted_latest_by_key
 from .stats import file_stats_rows
 
 # Target bytes per insert-path output task; sizes the insert write's
-# fan-out from the source volume estimate (overridable for tests /
-# unusual deployments).
-INSERT_TARGET_BYTES = int(
-    os.environ.get("FEPOC_MERGE_INSERT_TARGET", str(128 * 1024 * 1024))
-)
+# fan-out from the source volume estimate.
+INSERT_TARGET_BYTES = 128 * 1024 * 1024
 
 
 class DuplicateSourceKeys(ValueError):
@@ -94,22 +93,6 @@ class DuplicateSourceKeys(ValueError):
 
 
 logger = logging.getLogger(__name__)
-_TIMING = os.environ.get("FEPOC_MERGE_TIMING") == "1"
-
-
-class _Phase:
-    """Env-gated phase timer (FEPOC_MERGE_TIMING=1) for Amdahl hunting."""
-
-    def __init__(self, name: str):
-        self.name = name
-
-    def __enter__(self):
-        self.t0 = time.time()
-        return self
-
-    def __exit__(self, *exc):
-        if _TIMING:
-            print(f"MERGE_PHASE {self.name} {time.time() - self.t0:.2f}s", flush=True)
 
 
 def _parse_size(s: str) -> int:
@@ -133,7 +116,7 @@ def _broadcast_cap(spark: SparkSession) -> int:
     """Per-rewrite-unit broadcast cap, derived from the LIVE JVM heap.
 
     ``FEPOC_MERGE_BROADCAST_CAP`` overrides. Otherwise: heap/16 — up to
-    8 rewrite units broadcast concurrently (ThreadPoolExecutor below),
+    8 rewrite units broadcast concurrently (job.py's unit pool),
     and the in-heap hash relation costs ~2× the raw estimate, so worst
     case ≈ heap/2 of broadcast residency. Clamped to 80% of
     ``spark.driver.maxResultSize`` when one is set (broadcast relations
@@ -241,21 +224,19 @@ def _rewrite_all_broadcast(spark, src, pending, out_root, log) -> None:
         min(len(files_all), spark.sparkContext.defaultParallelism),
         len(files_all) // 2,
     )
-    with _Phase("rewrite_write"):
-        (
-            rewritten.withColumn("_part", F.col("source"))
-            .coalesce(n_out)
-            .sortWithinPartitions("_part", "doc_id")
-            .write.mode("overwrite")
-            .partitionBy("_part")
-            .parquet(str(out_dir))
-        )
+    (
+        rewritten.withColumn("_part", F.col("source"))
+        .coalesce(n_out)
+        .sortWithinPartitions("_part", "doc_id")
+        .write.mode("overwrite")
+        .partitionBy("_part")
+        .parquet(str(out_dir))
+    )
     pairs = []
     for d in sorted(out_dir.glob("_part=*")):
         part_val = unquote(d.name.split("=", 1)[1])
         pairs.extend((f, part_val) for f in list_parquet_files(d))
-    with _Phase("rewrite_stats"):
-        stats_all = file_stats_rows(spark, pairs)
+    stats_all = file_stats_rows(spark, pairs)
     by_unit: dict[str, list[dict]] = defaultdict(list)
     for s in stats_all:
         by_unit[s["partition"]].append(s)
@@ -307,42 +288,21 @@ def merge_into(
     )
     if own_persist:
         src = src.persist()
+    job = MaintenanceJob(spark, table, job_id or f"merge-snap{parent}", parent,
+                         _fail_after_units)
     try:
-        return _merge(
-            spark, table, src, parent, duplicate_policy, job_id,
-            max_touched_files, _fail_after_units,
-        )
+        return _merge(spark, table, src, job, duplicate_policy, max_touched_files)
     finally:
         if own_persist:
             src.unpersist()
 
 
-def _merge(spark, table, src, parent, duplicate_policy, job_id,
-           max_touched_files, _fail_after_units):
-    job_tag = job_id or f"merge-snap{parent}"
-    log = LineageLog(table.root, job_tag)
-    prior = log.committed()
+def _merge(spark, table, src, job, duplicate_policy, max_touched_files):
+    # a replayed job (e.g. a foreachBatch batch rerun after a crash
+    # between table commit and the stream checkpoint write) is a no-op
+    prior = job.replay()
     if prior is not None:
-        # Replayed job (e.g. a foreachBatch batch rerun after a crash in
-        # the window between table commit and the stream checkpoint
-        # write): this job's manifest rows are already committed.
-        # Re-committing would union them a second time. Idempotent return.
-        logger.info("merge job %s already committed snapshot %s; replay is a no-op",
-                    job_tag, prior.get("snapshot_id"))
-        return {k: v for k, v in prior.items()
-                if k not in ("event", "job_id", "timestamp_ms")}
-    published = table.snapshot_for_job(job_tag)
-    if published is not None:
-        # Crash landed between the VERSION swap and the 'committed'
-        # lineage append: the snapshot is live but the log doesn't say
-        # so. Repair the log and return — re-committing would union the
-        # same manifest rows a second time (duplicate files on scan).
-        logger.info("merge job %s found published snapshot %s; repairing lineage",
-                    job_tag, published["snapshot_id"])
-        summary = dict(published["summary"])
-        log.log_event("committed", snapshot_id=published["snapshot_id"], **summary)
-        return {"snapshot_id": published["snapshot_id"], **summary}
-    done = log.completed_units()
+        return prior
 
     # 1. PROFILE + PRUNE — ONE agg over the persisted source yields the
     # key range (manifest pruning), the row count + avg token length
@@ -359,23 +319,24 @@ def _merge(spark, table, src, parent, duplicate_policy, job_id,
     ]
     if duplicate_policy == "error":
         aggs.append(F.countDistinct("doc_id").alias("nd"))
-    with _Phase("profile_agg"):
+    with job.phase("profile"):
         prof = src.agg(*aggs).collect()[0]
-    if prof.lo is None:  # empty source
-        return {"snapshot_id": None, "rows_updated": 0, "rows_deleted": 0, "rows_inserted": 0}
-    if duplicate_policy == "error" and prof.nd != prof.n:
-        # rare failure path — only here do we spend a job finding an example
-        ex = src.groupBy("doc_id").count().filter(F.col("count") > 1).limit(1).collect()
-        raise DuplicateSourceKeys(
-            f"source has duplicate doc_id (e.g. {ex[0]['doc_id']}); "
-            "pass duplicate_policy='last' to dedupe"
-        )
+        if prof.lo is None:  # empty source
+            return {"snapshot_id": None, "rows_updated": 0, "rows_deleted": 0,
+                    "rows_inserted": 0}
+        if duplicate_policy == "error" and prof.nd != prof.n:
+            # rare failure path — only here do we spend a job finding an example
+            ex = src.groupBy("doc_id").count().filter(F.col("count") > 1).limit(1).collect()
+            raise DuplicateSourceKeys(
+                f"source has duplicate doc_id (e.g. {ex[0]['doc_id']}); "
+                "pass duplicate_policy='last' to dedupe"
+            )
     # Candidate pruning over DRIVER-SIDE manifest records (pyarrow footer
     # path for small manifests — no Spark job; distributed collect above
     # SMALL_MANIFEST_ROWS, see metadata.manifest_records).
-    with _Phase("candidate_collect"):
+    with job.phase("plan"):
         cand_rows = [
-            r for r in table.manifest_records(spark, parent)
+            r for r in table.manifest_records(spark, job.parent)
             if r["max_doc_id"] is not None and r["min_doc_id"] is not None
             and r["max_doc_id"] >= prof.lo and r["min_doc_id"] <= prof.hi
         ]
@@ -407,7 +368,7 @@ def _merge(spark, table, src, parent, duplicate_policy, job_id,
     broadcast_cap = _broadcast_cap(spark)
     fast = (
         est_src_bytes < broadcast_cap
-        and _fail_after_units is None  # crash hook needs per-unit jobs
+        and job.fail_after_units is None  # crash hook needs per-unit jobs
         # dynamic-partition routing can't represent a null partition
         and all(p != "__HIVE_DEFAULT_PARTITION__" for p in cand_by_part)
     )
@@ -451,7 +412,7 @@ def _merge(spark, table, src, parent, duplicate_policy, job_id,
         matched = spark.createDataFrame(
             [], "file_path string, doc_id string, _unit string, _op string"
         ).persist()
-    with _Phase("probe_collect"):
+    with job.phase("probe"):
         probe_rows = (
             matched.groupBy("_op")
             .agg(
@@ -482,14 +443,14 @@ def _merge(spark, table, src, parent, duplicate_policy, job_id,
         "rows_deleted": int(op_counts.get("delete", 0)),
         "rows_inserted": 0,
     }
-    out_root = table.new_data_dir(job_tag)
+    out_root = table.new_data_dir(job.job_tag)
     touched_norm = {_norm(t) for t in touched_files}
 
     # 3. REWRITE touched files — resumable per-partition units.
     pending = []
     for part in sorted(cand_by_part):
         files_p = [f for f in cand_by_part[part] if _norm(f) in touched_norm]
-        if files_p and f"rewrite:{part}" not in done:
+        if files_p and f"rewrite:{part}" not in job.done:
             pending.append((part, files_p))
 
     eff_src = None
@@ -502,8 +463,8 @@ def _merge(spark, table, src, parent, duplicate_policy, job_id,
         # crash redoes the single job.
         units_broadcast = len(pending)
         if pending:
-            with _Phase("rewrite_units"):
-                _rewrite_all_broadcast(spark, src, pending, out_root, log)
+            with job.phase("rewrite", units=len(pending)):
+                _rewrite_all_broadcast(spark, src, pending, out_root, job.log)
     else:
         # EFFECTIVE rewrite source: only rows whose key matched a target
         # row (inserts never join the rewrite), each tagged with the
@@ -530,7 +491,7 @@ def _merge(spark, table, src, parent, duplicate_policy, job_id,
         )
         # exact PER-UNIT size estimates from the materialized rewrite
         # side, not a guess — same single blocking agg as before, grouped.
-        with _Phase("eff_src_agg"):
+        with job.phase("eff_src"):
             eff_rows = (
                 eff_src.groupBy("_unit")
                 .agg(
@@ -596,24 +557,16 @@ def _merge(spark, table, src, parent, duplicate_policy, job_id,
             writer.mode("overwrite").parquet(str(out_dir))
             new_files = list_parquet_files(out_dir)
             stats = file_stats_rows(spark, [(f, part) for f in new_files])
-            log.mark_unit_done(
+            job.log.mark_unit_done(
                 f"rewrite:{part}",
                 files_in=files_p,
                 new_manifest_rows=stats,
                 metrics={"files_rewritten": len(files_p), "files_written": len(new_files)},
             )
 
-        # run units concurrently (Spark interleaves the jobs; lineage
-        # appends are thread-safe). Sequential under the crash hook.
-        if _fail_after_units is not None:
-            for i, (part, files_p) in enumerate(pending, 1):
-                run_rewrite_unit(part, files_p)
-                if i >= _fail_after_units:
-                    raise RuntimeError(f"injected failure after {i} units (test hook)")
-        elif pending:
-            with _Phase("rewrite_units"), ThreadPoolExecutor(max_workers=min(8, len(pending))) as ex:
-                for f in [ex.submit(run_rewrite_unit, p, fs) for p, fs in pending]:
-                    f.result()
+        job.run_units(
+            [(p, partial(run_rewrite_unit, p, fs)) for p, fs in pending], "rewrite"
+        )
 
     # 4. INSERT unit — not-matched upserts, ONE partitionBy write (the
     # per-source routing happens inside the job, not in a driver loop).
@@ -623,83 +576,69 @@ def _merge(spark, table, src, parent, duplicate_policy, job_id,
     # from the footer-stats pass the manifest needs anyway — no count()
     # job, and no second action over the repartitionByRange plan (its
     # sampling pass would re-execute it).
-    if "insert" not in done:
-        _t_ins = time.time()
-        anti_keys = matched.select("doc_id")
-        if fast:
-            # matched keys fit the broadcast cap by the fast-path
-            # condition → the anti-join needs no shuffle either
-            anti_keys = F.broadcast(anti_keys)
-        inserts = (
-            src.filter(F.col("_op") == "upsert")
-            .join(anti_keys, "doc_id", "left_anti")
-            .select("doc_id", "tokens", "n_tok", "source")
-        )
-        ins_dir = out_root / "_inserts"
-        # output-task count derived from the SOURCE volume estimate (an
-        # upper bound on insert volume), not a constant tied to the
-        # local core count: a microbatch-sized merge writes one file
-        # per partition instead of defaultParallelism/2 shards, while a
-        # 10^8-row merge fans out to one task per ~target-file-size.
-        n_out = max(1, min(
-            4 * spark.sparkContext.defaultParallelism,
-            (est_src_bytes + INSERT_TARGET_BYTES - 1) // INSERT_TARGET_BYTES,
-        ))
-        # hash repartition, not repartitionByRange: range sampling is a
-        # second action over the anti-join (forcing a persist of the
-        # full insert payload to keep it single-execution); a hash
-        # exchange needs neither — one shuffle, one pass, no cache.
-        (
-            inserts.withColumn("_part", F.col("source"))
-            .repartition(n_out, "source", "doc_id")
-            .sortWithinPartitions("source", "doc_id")
-            .write.mode("overwrite")
-            .partitionBy("_part")
-            .parquet(str(ins_dir))
-        )
-        pairs = []
-        for d in sorted(ins_dir.glob("_part=*")):
-            part_val = unquote(d.name.split("=", 1)[1])
-            if part_val == "__HIVE_DEFAULT_PARTITION__":
-                # a null `source` would otherwise be read back as the
-                # literal marker string and silently diverge from the
-                # row's actual (null) column — refuse to fabricate it
-                raise ValueError(
-                    "merge source contains rows with null `source` "
-                    "(partition column); inserts must carry a partition value"
-                )
-            pairs.extend((f, part_val) for f in list_parquet_files(d))
-        stats = file_stats_rows(spark, pairs)
-        n_ins = sum(s["record_count"] for s in stats)
-        log.mark_unit_done("insert", files_in=[], new_manifest_rows=stats,
-                           metrics={"rows_inserted": n_ins})
-        if _TIMING:
-            print(f"MERGE_PHASE insert {time.time() - _t_ins:.2f}s", flush=True)
+    if "insert" not in job.done:
+        with job.phase("insert", units=1):
+            anti_keys = matched.select("doc_id")
+            if fast:
+                # matched keys fit the broadcast cap by the fast-path
+                # condition → the anti-join needs no shuffle either
+                anti_keys = F.broadcast(anti_keys)
+            inserts = (
+                src.filter(F.col("_op") == "upsert")
+                .join(anti_keys, "doc_id", "left_anti")
+                .select("doc_id", "tokens", "n_tok", "source")
+            )
+            ins_dir = out_root / "_inserts"
+            # output-task count derived from the SOURCE volume estimate (an
+            # upper bound on insert volume), not a constant tied to the
+            # local core count: a microbatch-sized merge writes one file
+            # per partition instead of defaultParallelism/2 shards, while a
+            # 10^8-row merge fans out to one task per ~target-file-size.
+            n_out = max(1, min(
+                4 * spark.sparkContext.defaultParallelism,
+                (est_src_bytes + INSERT_TARGET_BYTES - 1) // INSERT_TARGET_BYTES,
+            ))
+            # hash repartition, not repartitionByRange: range sampling is a
+            # second action over the anti-join (forcing a persist of the
+            # full insert payload to keep it single-execution); a hash
+            # exchange needs neither — one shuffle, one pass, no cache.
+            (
+                inserts.withColumn("_part", F.col("source"))
+                .repartition(n_out, "source", "doc_id")
+                .sortWithinPartitions("source", "doc_id")
+                .write.mode("overwrite")
+                .partitionBy("_part")
+                .parquet(str(ins_dir))
+            )
+            pairs = []
+            for d in sorted(ins_dir.glob("_part=*")):
+                part_val = unquote(d.name.split("=", 1)[1])
+                if part_val == "__HIVE_DEFAULT_PARTITION__":
+                    # a null `source` would otherwise be read back as the
+                    # literal marker string and silently diverge from the
+                    # row's actual (null) column — refuse to fabricate it
+                    raise ValueError(
+                        "merge source contains rows with null `source` "
+                        "(partition column); inserts must carry a partition value"
+                    )
+                pairs.extend((f, part_val) for f in list_parquet_files(d))
+            stats = file_stats_rows(spark, pairs)
+            n_ins = sum(s["record_count"] for s in stats)
+            job.log.mark_unit_done("insert", files_in=[], new_manifest_rows=stats,
+                                   metrics={"rows_inserted": n_ins})
     matched.unpersist()
     if eff_src is not None:
         eff_src.unpersist()
 
     # 5. COMMIT — assemble from lineage (covers resumed units).
-    done = log.completed_units()
-    removed = [f for rec in done.values() for f in rec["files_in"]]
-    new_rows = [row for rec in done.values() for row in rec["new_manifest_rows"]]
-    for rec in done.values():
-        for k in metrics:
-            metrics[k] += rec["metrics"].get(k, 0)
-    summary = {**metrics, "files_rewritten": len(removed), "files_written": len(new_rows),
-               "candidate_files": len(cand_files), "touched_files": len(touched_files),
-               "broadcast_cap": broadcast_cap,
-               "units_broadcast": units_broadcast,
-               "job_tag": job_tag}
-    with _Phase("commit"):
-        # manifest-delta commit: driver-side pyarrow for small manifests
-        # (zero Spark jobs), distributed anti-join + union above the
-        # SMALL_MANIFEST_ROWS threshold (metadata.commit_delta)
-        sid = table.commit_delta(
-            spark, removed, new_rows, operation="merge", summary=summary, parent_id=parent
-        )
-    log.log_event("committed", snapshot_id=sid, **summary)
-    return {"snapshot_id": sid, **summary}
+    def summarize(done, removed, new_rows) -> dict:
+        totals = {k: v + sum(rec["metrics"].get(k, 0) for rec in done)
+                  for k, v in metrics.items()}
+        return {**totals, "files_rewritten": len(removed), "files_written": len(new_rows),
+                "candidate_files": len(cand_files), "touched_files": len(touched_files),
+                "broadcast_cap": broadcast_cap, "units_broadcast": units_broadcast}
+
+    return job.commit("merge", summarize)
 
 
 def _norm(p: str) -> str:

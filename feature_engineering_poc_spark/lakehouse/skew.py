@@ -1,9 +1,11 @@
-"""Explicit skew handling: salted two-phase aggregation and salted joins.
+"""Explicit skew handling: salted two-phase aggregation.
 
 AQE's skew-join splitting (enabled in session.py, precedent:
 reference SparkSessionManager.scala:62) handles partition-level skew at
 runtime; the utilities here handle KEY-level skew explicitly, per the
-north rule ("salted hash join over doc_id to defuse source-key skew").
+north rule ("salted hash join over doc_id to defuse source-key skew"):
+MERGE salts its source dedupe, so every downstream join sees unique
+keys.
 
 Where skew actually bites in MERGE: a source batch with a hot doc_id
 repeated millions of times (e.g. a crawler re-emitting one document).
@@ -46,32 +48,6 @@ def salted_latest_by_key(
     )
     phase2 = phase1.groupBy(key).agg(F.max("_r").alias("_r"))
     return phase2.select([F.col(f"_r.{c}").alias(c) for c in cols])
-
-
-def salted_join(
-    skewed: DataFrame,
-    unique_side: DataFrame,
-    key: str,
-    salt: int = 16,
-    how: str = "inner",
-) -> DataFrame:
-    """Join a skewed DataFrame against one with UNIQUE keys, salting.
-
-    The unique side is replicated ``salt`` times (explode over
-    0..salt-1); the skewed side gets a deterministic per-row salt, so a
-    hot key's rows spread over ``salt`` reducers instead of one.
-    Replication cost: unique_side × salt rows shuffled — use only when
-    the skewed side's key histogram justifies it (see
-    ``hot_keys``).
-    """
-    if how not in ("inner", "left"):
-        raise ValueError("salted_join supports inner/left (skewed side preserved)")
-    s = skewed.withColumn("_salt", _salt_col(skewed, salt))
-    u = unique_side.withColumn(
-        "_salt", F.explode(F.sequence(F.lit(0), F.lit(salt - 1)))
-    )
-    out = s.join(u, on=[key, "_salt"], how=how)
-    return out.drop("_salt")
 
 
 def hot_keys(df: DataFrame, key: str, threshold: int) -> DataFrame:

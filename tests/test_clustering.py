@@ -108,6 +108,7 @@ def test_cluster_resume(spark, tmp_path):
     assert t.current_snapshot_id() == 1
     result = cluster(spark, t, curve="zorder", target_file_bytes=48 * 1024, job_id="clresume")
     assert result["snapshot_id"] == 2
+    assert result["units_resumed"] == 1
     assert_scan_equivalent(t.scan(spark, 1), t.scan(spark))
 
 

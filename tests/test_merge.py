@@ -125,18 +125,32 @@ def test_salted_latest_by_key_hot_key(spark):
     assert winner._seq == 4999  # max _seq survived two-phase agg
 
 
-def test_merge_with_salted_join(spark, table):
-    src = _source(spark, table)
-    r_plain = merge_into(spark, table, src)
-    assert r_plain["snapshot_id"] == 2
-    # same merge onto snapshot 1 replayed with salting on a fresh table
-    # must produce identical aggregate state
+def test_merge_dedupe_salt_invariance(spark, tmp_path):
+    """Salting only spreads the "last"-policy dedupe over reducers: the
+    same merge, with a hot key repeated 200 times, at salt=1 and salt=16
+    on two fresh tables must leave identical tables."""
     from feature_engineering_poc_spark.lakehouse.equivalence import scan_fingerprint
 
-    fp = scan_fingerprint(table.scan(spark))
-    # re-apply: new table, same ops, salted
-    # (cheap determinism check: salt must not change the result)
-    assert fp.row_count == table.scan(spark).count()
+    fps = []
+    for salt in (1, 16):
+        t = write_token_table(
+            spark, tmp_path / f"salt{salt}", n_rows=1000, files_per_source=4, max_tok=64
+        )
+        hot = t.scan(spark).orderBy("doc_id").limit(1).collect()[0]
+        dups = spark.range(200).select(
+            F.lit(hot.doc_id).alias("doc_id"),
+            F.array(F.col("id").cast("int")).alias("tokens"),
+            F.lit(1).cast("int").alias("n_tok"),
+            F.lit(hot.source).alias("source"),
+            F.lit("upsert").alias("_op"),
+            F.col("id").alias("_seq"),
+        )
+        src = _source(spark, t).withColumn("_seq", F.lit(0).cast("long")).unionByName(dups)
+        merge_into(spark, t, src, duplicate_policy="last", salt=salt)
+        row = t.scan(spark).filter(F.col("doc_id") == hot.doc_id).collect()[0]
+        assert list(row.tokens) == [199]  # highest _seq of the hot key wins
+        fps.append(scan_fingerprint(t.scan(spark)))
+    assert (fps[0].row_count, fps[0].xor_hash) == (fps[1].row_count, fps[1].xor_hash)
 
 
 def test_merge_resume_from_checkpoint(spark, table):
@@ -147,6 +161,7 @@ def test_merge_resume_from_checkpoint(spark, table):
     result = merge_into(spark, table, src, job_id="mresume")
     assert result["snapshot_id"] == 2
     assert result["rows_inserted"] == 100
+    assert result["units_resumed"] == 1
     src.unpersist()
 
 
