@@ -1,32 +1,46 @@
 """Snapshot expiry + orphan-file GC + manifest rewrite (north_rule ops #4-5).
 
-All three are METADATA-dominant operations:
+All three touch only metadata and run on the driver: no Spark job and
+no Python worker below the small-table thresholds.
 
-- ``expire_snapshots``: drop snapshots beyond the retention policy and
-  delete data files reachable ONLY from expired snapshots. Reachability
-  is set algebra over manifests, computed distributedly
-  (union/distinct/anti-join on file_path — at 10^12-sequence scale the
-  manifests are themselves big data). The safety property (tested):
-  a file reachable from ANY retained snapshot is never deleted.
-  Reference precedent for aggressive retention:
+- ``expire_snapshots``: delete data files reachable ONLY from expired
+  snapshots: expired − retained over each manifest's ``file_path``
+  column (pyarrow), both sides scheme-normalised as in ``commit_delta``,
+  so ``/x`` and ``file:///x`` are one file. A file reachable from ANY
+  retained snapshot is never deleted (tested). Retention precedent:
   ``retentionDurationCheck.enabled=false`` (SparkSessionManager.scala:59).
-- ``remove_orphans``: delete files on the filesystem that no snapshot
-  references (debris from crashed jobs), with a modification-time
-  grace window so in-flight writers are never raced.
-- ``rewrite_manifests``: recompute every live file's stats from parquet
-  footers (stats.py) and publish a fresh, compacted manifest as a new
-  snapshot — same data files, new metadata.
+- ``remove_orphans``: listed − referenced, with an mtime grace window
+  so in-flight writers are never raced.
+- ``rewrite_manifests``: ``manifest_records`` → ``file_stats_rows`` →
+  ``commit_delta``; fresh footer stats, same data files.
+
+Scale: merge and compaction planning already hold a snapshot's whole
+manifest on the driver, and expiry always collected its doomed list
+there; 10^7 paths as an Arrow string column is about 1 GB. Deletes fan
+out over the executors past 10k files (``fs.delete_files``).
 """
 
 from __future__ import annotations
 
 import time
 
+import pyarrow.parquet as pq
 from pyspark.sql import SparkSession
 
 from . import fs as fslayer
-from .metadata import TokenTable, list_parquet_files
-from .stats import file_stats_df
+from .metadata import TokenTable, _strip_scheme, list_parquet_files
+# file_stats_df stays bound here because perfbench/tracing.py wraps it by name.
+from .stats import file_stats_df, file_stats_rows  # noqa: F401
+
+
+def _referenced(table: TokenTable, snapshot_ids) -> set[str]:
+    """Scheme-normalised data-file paths of the given snapshots' manifests."""
+    return {
+        _strip_scheme(p)
+        for sid in snapshot_ids
+        for f in table._manifest_files(sid)
+        for p in pq.read_table(f, columns=["file_path"]).column(0).to_pylist()
+    }
 
 
 def expire_snapshots(
@@ -53,20 +67,7 @@ def expire_snapshots(
     if not expired_ids:
         return {"expired_snapshots": [], "deleted_files": 0}
 
-    # Reachability — distributed set algebra over manifests.
-    def union_manifests(ids):
-        dfs = [table.manifest_df(spark, i).select("file_path") for i in ids]
-        out = dfs[0]
-        for d in dfs[1:]:
-            out = out.unionByName(d)
-        return out.distinct()
-
-    reachable = union_manifests(sorted(retained_ids))
-    expired_refs = union_manifests(expired_ids)
-    doomed = [
-        r.file_path
-        for r in expired_refs.join(reachable, "file_path", "left_anti").collect()
-    ]
+    doomed = sorted(_referenced(table, expired_ids) - _referenced(table, retained_ids))
     if not dry_run:
         # fs layer: driver loop for planning-sized lists, distributed
         # foreachPartition fan-out past the threshold (fs.py) — an
@@ -93,29 +94,19 @@ def remove_orphans(
 ) -> dict:
     """Delete data files no snapshot references, respecting a grace window.
 
-    Listing is driver-side ``rglob`` here (local FS); on object storage
-    this becomes a distributed listing job — the anti-join is already
-    distributed either way.
+    Listing is driver-side ``rglob`` (local FS); on object storage a
+    listing job would feed the same set difference.
     """
     snaps = table.snapshots()
-    refs = None
-    for s in snaps:
-        if s.get("manifest") is None:
-            continue
-        d = table.manifest_df(spark, s["snapshot_id"]).select("file_path")
-        refs = d if refs is None else refs.unionByName(d)
+    refs = _referenced(table, [s["snapshot_id"] for s in snaps])
     listed = list_parquet_files(table.data_dir)
-    listed_df = spark.createDataFrame([(f,) for f in listed] or [], "file_path string")
-    orphans_df = (
-        listed_df.join(refs.distinct(), "file_path", "left_anti") if refs is not None else listed_df
-    )
     cutoff = time.time() - grace_period_ms / 1000.0
 
     def _old_enough(p) -> bool:
         mtime = fslayer.file_mtime(p)
         return mtime is not None and mtime < cutoff
 
-    orphans = [r.file_path for r in orphans_df.collect() if _old_enough(r.file_path)]
+    orphans = [f for f in listed if _strip_scheme(f) not in refs and _old_enough(f)]
     # Manifest dirs from commit attempts that crashed before publishing
     # (commit() writes manifests to unique paths before the CAS): any
     # metadata/manifest-* dir no snapshot references is debris.
@@ -141,15 +132,9 @@ def rewrite_manifests(spark: SparkSession, table: TokenTable) -> dict:
     """Recompute per-file stats from parquet footers; new snapshot,
     same data files."""
     parent = table.current_snapshot_id()
-    pairs = [
-        (r.file_path, r.partition)
-        for r in table.manifest_df(spark).select("file_path", "partition").collect()
-    ]
-    fresh = file_stats_df(spark, pairs)
-    sid = table.commit(
-        fresh,
-        operation="rewrite-manifests",
-        summary={"files": len(pairs)},
-        parent_id=parent,
-    )
-    return {"snapshot_id": sid, "files": len(pairs)}
+    live = table.manifest_records(spark, parent)
+    fresh = file_stats_rows(spark, [(r["file_path"], r["partition"]) for r in live])
+    removed = [r["file_path"] for r in live]
+    sid = table.commit_delta(spark, removed, fresh, operation="rewrite-manifests",
+                             summary={"files": len(live)}, parent_id=parent)
+    return {"snapshot_id": sid, "files": len(live)}

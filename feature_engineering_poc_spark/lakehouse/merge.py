@@ -77,9 +77,10 @@ from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .job import MaintenanceJob
-from .metadata import TOKEN_SCHEMA, TokenTable, list_parquet_files
+from .metadata import TOKEN_SCHEMA, TokenTable, empty_df, list_parquet_files
 from .skew import salted_latest_by_key
 from .stats import file_stats_rows
 
@@ -409,9 +410,9 @@ def _merge(spark, table, src, job, duplicate_policy, max_touched_files):
                 .persist()
             )
     else:
-        matched = spark.createDataFrame(
-            [], "file_path string, doc_id string, _unit string, _op string"
-        ).persist()
+        matched = empty_df(spark, T.StructType.fromDDL(
+            "file_path string, doc_id string, _unit string, _op string"
+        )).persist()
     with job.phase("probe"):
         probe_rows = (
             matched.groupBy("_op")

@@ -189,7 +189,7 @@ class TokenTable:
         """The manifest of a snapshot as a DataFrame (metadata-level plan input)."""
         snap = self.snapshot(snapshot_id)
         if snap["manifest"] is None:
-            return spark.createDataFrame([], MANIFEST_SCHEMA)
+            return empty_df(spark, MANIFEST_SCHEMA)
         return spark.read.schema(MANIFEST_SCHEMA).parquet(str(self.root / snap["manifest"]))
 
     def data_files(self, spark: SparkSession, snapshot_id: int | None = None) -> list[str]:
@@ -250,7 +250,7 @@ class TokenTable:
         if files is None:
             files = self.data_files(spark, snapshot_id)
         if not files:
-            return spark.createDataFrame([], TOKEN_SCHEMA)
+            return empty_df(spark, TOKEN_SCHEMA)
         # Explicit schema: skips schema inference listing AND tolerates
         # extra physical columns (e.g. a persisted zkey) in some files.
         return spark.read.schema(TOKEN_SCHEMA).parquet(*files)
@@ -475,6 +475,14 @@ class TokenTable:
                         p.unlink()
                     mdir.rmdir()
         return new_id
+
+
+def empty_df(spark: SparkSession, schema: T.StructType) -> DataFrame:
+    """An empty DataFrame of ``schema`` (all columns nullable) that runs in
+    the JVM alone; ``createDataFrame([], schema)`` is a Python-RDD scan."""
+    return spark.range(0, numPartitions=1).select(
+        [F.lit(None).cast(f.dataType).alias(f.name) for f in schema.fields]
+    )
 
 
 def _strip_scheme(p: str) -> str:

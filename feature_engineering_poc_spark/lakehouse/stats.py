@@ -18,7 +18,7 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
-from .metadata import MANIFEST_SCHEMA
+from .metadata import MANIFEST_SCHEMA, empty_df
 
 # Stats we track per file. tokens (array) carries no footer stats.
 _STAT_COLS = ("doc_id", "n_tok", "zkey")
@@ -88,7 +88,7 @@ def file_stats_df(
     in MANIFEST_SCHEMA order.
     """
     if not files:
-        return spark.createDataFrame([], MANIFEST_SCHEMA)
+        return empty_df(spark, MANIFEST_SCHEMA)
     parallelism = parallelism or spark.sparkContext.defaultParallelism
     paths_df = spark.createDataFrame(files, "file_path string, partition string").repartition(
         min(len(files), parallelism)

@@ -89,3 +89,23 @@ def test_rewrite_manifests_same_files_fresh_stats(spark, table):
     assert_scan_equivalent(table.scan(spark, pre_sid), table.scan(spark))
     m = table.manifest_df(spark)
     assert m.filter("record_count is null or file_bytes is null").count() == 0
+
+
+def test_rewrite_manifests_distributed_side_matches_driver_side(spark, table, monkeypatch):
+    """Both sides of SMALL_STATS_FILES and SMALL_MANIFEST_ROWS publish the
+    same manifest rows."""
+    from feature_engineering_poc_spark.lakehouse import metadata, stats
+
+    def rows():
+        return sorted(table.manifest_records(spark), key=lambda r: r["file_path"])
+
+    rewrite_manifests(spark, table)
+    driver_rows = rows()
+    monkeypatch.setattr(stats, "SMALL_STATS_FILES", 0)
+    monkeypatch.setattr(metadata, "SMALL_MANIFEST_ROWS", 0)
+    r = rewrite_manifests(spark, table)
+    # the Spark manifest write leaves its _SUCCESS marker; pyarrow's does not
+    assert (table.root / table.snapshot(r["snapshot_id"])["manifest"] / "_SUCCESS").exists()
+    monkeypatch.undo()
+    assert rows() == driver_rows
+    assert r["files"] == len(driver_rows) > 0

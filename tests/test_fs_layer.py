@@ -14,7 +14,7 @@ from feature_engineering_poc_spark.lakehouse import (
 )
 from feature_engineering_poc_spark.lakehouse import fs as fslayer
 from feature_engineering_poc_spark.lakehouse.compaction import compact
-from feature_engineering_poc_spark.lakehouse.expire import expire_snapshots
+from feature_engineering_poc_spark.lakehouse.expire import expire_snapshots, remove_orphans
 
 
 def _to_uri_manifest(spark, table):
@@ -56,6 +56,41 @@ def test_expire_deletes_uri_referenced_files(spark, tmp_path):
     assert r["deleted_files"] > 0
     assert not any(p.exists() for p in plain_files)  # fs.delete resolved the URIs
     assert_scan_equivalent(t.scan(spark), t.scan(spark))
+
+
+def test_expire_keeps_files_retained_under_uri_name(spark, tmp_path):
+    """One file named two ways is one file: the expired snapshot names
+    every file by plain path, the retained one by file:// URI, so
+    nothing is unreachable."""
+    t = write_token_table(spark, tmp_path / "t", n_rows=600, files_per_source=3, max_tok=32)
+    before = scan_fingerprint(t.scan(spark))
+    plain_files = [Path(f) for f in t.data_files(spark)]
+    _to_uri_manifest(spark, t)
+    r = expire_snapshots(spark, t, keep_last=1)
+    assert r["expired_snapshots"] == [0, 1]
+    assert r["deleted_files"] == 0
+    assert all(p.exists() for p in plain_files)
+    after = scan_fingerprint(t.scan(spark))
+    assert (after.row_count, after.xor_hash) == (before.row_count, before.xor_hash)
+
+
+def test_remove_orphans_keeps_files_referenced_by_uri(spark, tmp_path):
+    """The listing yields plain paths; a snapshot referencing the same
+    files by file:// URI must still protect them from GC."""
+    t = write_token_table(spark, tmp_path / "t", n_rows=600, files_per_source=3, max_tok=32)
+    before = scan_fingerprint(t.scan(spark))
+    plain_files = [Path(f) for f in t.data_files(spark)]
+    uri_sid = _to_uri_manifest(spark, t)
+    # retain only the URI snapshot (drop the older descriptors without
+    # expiry's data-file deletes)
+    for sid in range(uri_sid):
+        t.snapshot_path(sid).unlink()
+    r = remove_orphans(spark, t, grace_period_ms=0)
+    assert r["files_listed"] == len(plain_files)
+    assert r["orphans_deleted"] == 0
+    assert all(p.exists() for p in plain_files)
+    after = scan_fingerprint(t.scan(spark))
+    assert (after.row_count, after.xor_hash) == (before.row_count, before.xor_hash)
 
 
 def test_delete_files_distributed_path(spark, tmp_path):

@@ -14,6 +14,11 @@ from pyspark.sql import functions as F
 from feature_engineering_poc_spark.lakehouse import write_token_table
 from feature_engineering_poc_spark.lakehouse.clustering import cluster
 from feature_engineering_poc_spark.lakehouse.compaction import compact
+from feature_engineering_poc_spark.lakehouse.expire import (
+    expire_snapshots,
+    remove_orphans,
+    rewrite_manifests,
+)
 from feature_engineering_poc_spark.lakehouse.generator import token_dataframe
 from feature_engineering_poc_spark.lakehouse.lineage import LineageLog
 from feature_engineering_poc_spark.lakehouse.merge import merge_into
@@ -76,3 +81,21 @@ def test_every_job_grouped_and_phases_recorded(spark, tmp_path, monkeypatch, op)
         j for u in units for j in tracker.getJobIdsForGroup(f"{r['job_tag']}:{u}:rewrite")
     ]
     assert rewrite_jobs
+
+
+def test_metadata_ops_submit_no_spark_job(spark, tmp_path):
+    """Expiry, orphan GC and manifest rewrite of a small table run on the
+    driver: no Spark job, grouped or not."""
+    t = write_token_table(spark, tmp_path / "t", n_rows=1000, files_per_source=4, max_tok=64)
+    compact(spark, t, target_file_bytes=64 * 1024 * 1024)
+    (t.data_dir / "junk.parquet").write_bytes(b"PAR1junk")
+    # no group on this thread: any job the ops submit lands in group None
+    assert spark.sparkContext.getLocalProperty("spark.jobGroup.id") is None
+    before = _ungrouped_job_ids(spark)
+
+    e = expire_snapshots(spark, t, keep_last=1)
+    o = remove_orphans(spark, t, grace_period_ms=0)
+    m = rewrite_manifests(spark, t)
+
+    assert _ungrouped_job_ids(spark) == before
+    assert e["deleted_files"] > 0 and o["orphans_deleted"] == 1 and m["files"] > 0

@@ -7,7 +7,7 @@ import duckdb
 import pytest
 from pyspark.sql import functions as F
 
-from feature_engineering_poc_spark.lakehouse import write_token_table
+from feature_engineering_poc_spark.lakehouse import scan_fingerprint, write_token_table
 from feature_engineering_poc_spark.lakehouse.generator import token_dataframe
 from feature_engineering_poc_spark.lakehouse.merge import (
     DuplicateSourceKeys,
@@ -169,6 +169,43 @@ def test_merge_empty_source_noop(spark, table):
     empty = spark.createDataFrame([], "doc_id string, tokens array<int>, n_tok int, source string")
     result = merge_into(spark, table, empty)
     assert result["snapshot_id"] is None
+
+
+def test_merge_pure_append_inserts_exactly_its_rows(spark, table):
+    """A source whose key range hits no file (the common streaming
+    microbatch shape) probes nothing and inserts each row once."""
+    inserts = token_dataframe(spark, 50, seed=7, max_tok=16, id_offset=10_000_000)
+    expected = scan_fingerprint(table.scan(spark).unionByName(inserts))
+    r = merge_into(spark, table, inserts.withColumn("_op", F.lit("upsert")))
+    assert (r["rows_inserted"], r["rows_updated"], r["rows_deleted"]) == (50, 0, 0)
+    assert r["touched_files"] == 0
+    after = scan_fingerprint(table.scan(spark))
+    assert (after.row_count, after.xor_hash) == (expected.row_count, expected.xor_hash)
+
+
+def test_empty_frames_plan_without_python_rdd(spark, tmp_path):
+    """Empty DataFrames (empty_df and its callers) run in the JVM alone:
+    no Python-RDD scan, so no Python worker."""
+    from feature_engineering_poc_spark.lakehouse.metadata import (
+        MANIFEST_SCHEMA,
+        TokenTable,
+        empty_df,
+    )
+    from feature_engineering_poc_spark.lakehouse.stats import file_stats_df
+
+    t = TokenTable.create(tmp_path / "empty")
+    frames = [
+        empty_df(spark, MANIFEST_SCHEMA),
+        t.manifest_df(spark),
+        t.scan(spark),
+        file_stats_df(spark, []),
+    ]
+    for df in frames:
+        assert df.collect() == []
+        assert "ExistingRDD" not in df._jdf.queryExecution().executedPlan().toString()
+    assert [(f.name, f.dataType) for f in frames[0].schema] == [
+        (f.name, f.dataType) for f in MANIFEST_SCHEMA
+    ]
 
 
 def test_broadcast_cap_heap_aware(spark, monkeypatch):
